@@ -19,15 +19,28 @@ import sys
 import threading
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+BENCH = Path(__file__).resolve().parent
+sys.path.insert(0, str(BENCH))
 import build  # noqa: E402
 
-WORKLOADS = ["etl_backfill", "etl_incremental", "stream_replay"]
+WORKLOADS = ["etl_backfill", "etl_incremental", "stream_replay", "registry_mix"]
 RUN_TIMEOUT_S = 170
 ADD_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
              "java.net", "java.nio", "java.util", "java.util.concurrent",
              "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
              "sun.security.action", "sun.util.calendar"]
+
+
+def java(run_dir: Path, main_class: str) -> list:
+    """The JVM command line of a harness main, with its scratch in run_dir."""
+    return (["java"]
+            + [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
+            + ["-Xmx3g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
+               f"-Djava.io.tmpdir={run_dir / 'tmp'}",
+               f"-Dderby.system.home={run_dir / 'derby'}",
+               f"-Dderby.stream.error.file={run_dir / 'derby.log'}",
+               "-Dspark.ui.enabled=false",
+               "-cp", build.classpath(), main_class])
 
 
 def main() -> int:
@@ -36,9 +49,10 @@ def main() -> int:
     ap.add_argument("--seed", required=True, type=int)
     ap.add_argument("--seconds", required=True, type=int)
     ap.add_argument("--trace", required=True, type=int, choices=[0, 1])
-    # Test hook: make one timed operation throw or one output check
-    # mismatch, to prove the harness counts it as failed.
-    ap.add_argument("--inject-failure", choices=["op", "check"])
+    # Test hook: make the first timed operation throw (op), every one throw
+    # (all-ops) or the first output check mismatch (check), to prove the
+    # harness counts it as failed.
+    ap.add_argument("--inject-failure", choices=["op", "all-ops", "check"])
     args = ap.parse_args()
 
     classes = build.build()
@@ -47,17 +61,10 @@ def main() -> int:
     shutil.rmtree(run_dir, ignore_errors=True)
     (run_dir / "tmp").mkdir(parents=True)
     cores = os.cpu_count() or 1
-    cmd = (["java"]
-           + [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
-           + ["-Xmx3g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
-              f"-Djava.io.tmpdir={run_dir / 'tmp'}",
-              f"-Dderby.system.home={run_dir / 'derby'}",
-              f"-Dderby.stream.error.file={run_dir / 'derby.log'}",
-              "-Dspark.ui.enabled=false",
-              "-cp", build.classpath(), "graftbench.Main",
-              "--workload", args.workload, "--seed", str(args.seed),
+    cmd = (java(run_dir, "graftbench.Main")
+           + ["--workload", args.workload, "--seed", str(args.seed),
               "--seconds", str(args.seconds), "--trace", str(args.trace),
-              "--cores", str(cores), "--work", str(run_dir),
+              "--cores", str(cores), "--bench", str(BENCH), "--work", str(run_dir),
               "--records", str(work / "records")])
     if args.inject_failure:
         cmd += ["--inject-failure", args.inject_failure]

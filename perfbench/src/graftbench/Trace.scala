@@ -44,6 +44,8 @@ final class Tracer(spark: SparkSession) {
 
   // QueryExecutionListener + StreamingQueryListener totals
   val planningMs = new AtomicLong
+  /** Planning time of the queries each traced operation ran. */
+  val opPlanningMs = mutable.Map.empty[Int, Long]
   val streamProgress = new java.util.concurrent.ConcurrentLinkedQueue[
     org.apache.spark.sql.streaming.StreamingQueryProgress]()
 
@@ -102,6 +104,7 @@ final class Tracer(spark: SparkSession) {
   /** Run one traced operation: listeners attached, a root span around it. */
   def operation[T](opId: Int, name: String)(body: => T): T = {
     op = opId
+    val planned = planningMs.get
     sc.addSparkListener(sparkListener)
     spark.listenerManager.register(queryListener)
     spark.streams.addListener(streamListener)
@@ -111,6 +114,7 @@ final class Tracer(spark: SparkSession) {
       sc.removeSparkListener(sparkListener)
       spark.listenerManager.unregister(queryListener)
       spark.streams.removeListener(streamListener)
+      opPlanningMs(opId) = planningMs.get - planned
     }
   }
 

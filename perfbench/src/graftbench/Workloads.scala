@@ -16,31 +16,48 @@ final case class OpFacts(inputBytes: Long = 0, eventsBytes: Long = 0,
     eventsFiles: Long = 0, edges: Long = 0, sinkRows: Long = 0,
     replayInserted: Long = 0)
 
-/** A named workload. `setup` is run several times (each from scratch);
-  * the state of the last one is what the timed operations run on. */
+/** A named workload: inputs written once, one timed set-up, then timed
+  * operations, each followed by its output check. */
 trait Workload {
   /** Typical time of one operation on a 4-core machine; sizes the run. */
   def nominalOpSeconds: Double
-  def setup(i: Int): Unit
+  /** Timed operations of a run. Every run of a workload takes the same
+    * number; a traced run takes at least three pairs of operations, one of
+    * each pair traced. */
+  def plannedOps(seconds: Int, trace: Boolean): Int = {
+    val n = math.max(2, math.round(seconds / nominalOpSeconds).toInt)
+    if (trace) math.max(6, n + n % 2) else n
+  }
+  /** Writes the run's inputs, untimed, before the set-up. */
+  def prepare(): Unit = ()
+  /** The run's set-up: it warms the engine's code paths (the JVM's first
+    * work) and builds what the operations read. Timed as `setup_s`. */
+  def setup(): Unit
   /** One timed operation; returns rows landed in the warehouse. Traced
     * when a tracer is given. Throws if the engine fails. */
   def op(k: Int, tracer: Option[Tracer]): Long
   /** Output check of operation `k`: None when correct, else what differs. */
   def check(k: Int, rows: Long): Option[String]
+  /** What operation k runs, for the run record. */
+  def label(k: Int): String = ""
   /** Check of the state the run ends in. */
   def finalCheck(): Option[String] = None
   /** Undo per-operation state outside the timed part. */
   def cleanup(k: Int): Unit = ()
-  /** Directory of the inputs the last operation read. */
-  def inputDir: Path
+  /** Directory of the NDJSON inputs the operations read, if any. */
+  def ndjsonInput: Option[Path]
   def facts: OpFacts
 }
 
 object Workloads {
-  def apply(name: String, spark: SparkSession, work: Path, seed: Long): Workload = name match {
+  def apply(name: String, spark: SparkSession, work: Path, seed: Long, trace: Boolean,
+      bench: Path): Workload = name match {
     case "etl_backfill"    => new Backfill(spark, work, seed)
     case "etl_incremental" => new Incremental(spark, work, seed)
     case "stream_replay"   => new StreamReplay(spark, work, seed)
+    case "registry_mix"    => new RegistryMix(spark, work, seed, trace,
+      bench.resolve("data").resolve(RegistryMix.Tables),
+      bench.resolve(s"expected-${RegistryMix.Tables}.json"))
   }
 
   def deleteTree(p: Path): Unit =
@@ -72,14 +89,14 @@ object Workloads {
     } else None
   }
 
-  /** Tiny corpus through the batch pipeline with the JDBC sink, so JIT,
-    * codegen, the parquet writer and the Derby driver are warm. */
-  def warmBatch(spark: SparkSession, dir: Path, seed: Long, db: String): Unit = {
-    val in = dir.resolve("in")
-    Corpus.writeAll(in, seed, 1 to 2, 3000, 500)
+  /** A small corpus through the batch pipeline with the JDBC sink into a
+    * fresh output directory and database, so JIT, codegen, the parquet
+    * writer and the Derby driver are warm. */
+  def warmBatch(spark: SparkSession, in: Path, dir: Path, db: String): Unit = {
     Pipeline.run(spark, in.toString, dir.resolve("out").toString,
       Some(dir.resolve("wm").toString), Some(Derby.connector(db)), Derby.MaxVarchar)
     Derby.drop(db)
+    deleteTree(dir)
   }
 }
 
@@ -173,13 +190,18 @@ final class Backfill(spark: SparkSession, work: Path, seed: Long)
   def nominalOpSeconds = 3.3
   private var corpus: Seq[RevisionFile] = Nil
   private lazy val closure = Corpus.closure(corpus.flatMap(_.edges))
-  def inputDir: Path = work.resolve("corpus")
+  private val inputDir = work.resolve("corpus")
+  def ndjsonInput: Option[Path] = Some(inputDir)
 
-  def setup(i: Int): Unit = {
-    Workloads.deleteTree(inputDir)
+  override def prepare(): Unit = {
     corpus = Corpus.writeAll(inputDir, seed, 1 to NFiles, Lines, People)
-    Workloads.warmBatch(spark, work.resolve(s"warm$i"), seed + i, s"warm$i")
+    // the warm pass runs a corpus of the timed one's shape: with a smaller
+    // one, the first timed pass was still a third slower than the next
+    Corpus.writeAll(work.resolve("warm-in"), seed + 1, 1 to NFiles, Lines, People)
   }
+
+  def setup(): Unit =
+    Workloads.warmBatch(spark, work.resolve("warm-in"), work.resolve("warm"), "warm")
 
   def op(k: Int, tracer: Option[Tracer]): Long =
     pipeline(tracer, k, inputDir, work.resolve(s"out$k"), Some(work.resolve(s"wm$k")), s"bf$k",
@@ -209,10 +231,11 @@ final class Incremental(spark: SparkSession, work: Path, seed: Long)
   private var staged: Seq[RevisionFile] = Nil
   private var landed = 0          // files in the input directory
   private var pending = 0         // landed files not yet loaded
-  private var db = ""
-  private def out = work.resolve(s"out-$db")
-  private def wm = work.resolve(s"wm-$db")
-  def inputDir: Path = work.resolve(s"in-$db")
+  private val db = "inc"
+  private val out = work.resolve("out")
+  private val wm = work.resolve("wm")
+  private val inputDir = work.resolve("in")
+  def ndjsonInput: Option[Path] = Some(inputDir)
 
   private def land(n: Int): Unit = (0 until n).foreach { _ =>
     val f = staged(landed)
@@ -220,15 +243,14 @@ final class Incremental(spark: SparkSession, work: Path, seed: Long)
     landed += 1; pending += 1
   }
 
-  def setup(i: Int): Unit = {
-    if (db.nonEmpty) { Derby.drop(db); Seq(out, wm, inputDir).foreach(Workloads.deleteTree) }
-    db = s"inc$i"
-    val stage = work.resolve(s"staged$i")
-    Workloads.deleteTree(stage)
-    staged = Corpus.writeAll(stage, seed, 1 to Initial + MaxDeltas, Lines, People)
+  override def prepare(): Unit = {
+    staged = Corpus.writeAll(work.resolve("staged"), seed, 1 to Initial + MaxDeltas, Lines, People)
+    Corpus.writeAll(work.resolve("warm-in"), seed + 1, 1 to 2, Lines, People)
+  }
+
+  def setup(): Unit = {
     Files.createDirectories(inputDir)
-    landed = 0; pending = 0
-    Workloads.warmBatch(spark, work.resolve(s"warm$i"), seed + i, s"warm$i")
+    Workloads.warmBatch(spark, work.resolve("warm-in"), work.resolve("warm"), "warm")
     land(Initial)
     Pipeline.run(spark, inputDir.toString, out.toString, Some(wm.toString),
       Some(Derby.connector(db)), Derby.MaxVarchar)
@@ -270,6 +292,11 @@ final class Incremental(spark: SparkSession, work: Path, seed: Long)
   }
 }
 
+object StreamReplay {
+  /** What `StreamPipeline.drain` throws for `crashAfterBatch = Some(1)`. */
+  val CrashMessage = "injected crash after sink write of batch 1"
+}
+
 /** stream_replay: the corpus through `StreamPipeline.drain` into Derby with
   * a crash injected after batch 1's sink commit, a restart from the
   * checkpoint, then `refreshIdentity`. Each operation is one such cycle
@@ -280,12 +307,15 @@ final class StreamReplay(spark: SparkSession, work: Path, seed: Long) extends Wo
   private var corpus: Seq[RevisionFile] = Nil
   private lazy val closure = Corpus.closure(corpus.flatMap(_.edges))
   private var lastFacts = OpFacts()
-  private val outcome = scala.collection.mutable.Map.empty[Int, (Boolean, Long)]
+  private val outcome = scala.collection.mutable.Map.empty[Int, (Option[Throwable], Long, Long)]
   def facts: OpFacts = lastFacts
-  def inputDir: Path = work.resolve("corpus")
+  private val inputDir = work.resolve("corpus")
+  def ndjsonInput: Option[Path] = Some(inputDir)
 
-  private def cycle(k: Int, in: Path, db: String, tracer: Option[Tracer]): (Boolean, Long, Long) = {
-    val ckpt = work.resolve(s"ckpt$k").toString
+  /** (first attempt's failure, rows it inserted, rows both inserted,
+    * identity rows). */
+  private def cycle(in: Path, ckpt: String, db: String, tracer: Option[Tracer])
+      : (Option[Throwable], Long, Long, Long) = {
     val connect = Derby.connector(db)
     def span[T](name: String)(body: => T): T = tracer.fold(body)(_.span(name)(body))
     val r1 = span("stream.drain")(StreamPipeline.drain(spark, in.toString, ckpt, "tb_event",
@@ -297,27 +327,29 @@ final class StreamReplay(spark: SparkSession, work: Path, seed: Long) extends Wo
     r2.failure.foreach(e => throw e)
     val ids = span("stream.refresh_identity")(
       StreamPipeline.refreshIdentity(spark, Derby.url(db), "tb_event", "tb_identity", connect))
-    (r1.failure.isDefined, r1.inserted + r2.inserted, ids)
+    (r1.failure, r1.inserted, r1.inserted + r2.inserted, ids)
   }
 
-  def setup(i: Int): Unit = {
-    Workloads.deleteTree(inputDir)
+  override def prepare(): Unit = {
     corpus = Corpus.writeAll(inputDir, seed, 1 to NFiles, Lines, People)
-    val warm = work.resolve(s"warm$i")
-    Corpus.writeAll(warm.resolve("in"), seed + i, 1 to 4, 500, 200)
-    cycle(-i, warm.resolve("in"), s"warm$i", None)
-    Derby.drop(s"warm$i")
-    Workloads.deleteTree(warm)
-    Workloads.deleteTree(work.resolve(s"ckpt${-i}"))
+    // the warm cycle runs a corpus of the timed one's shape, crash and
+    // replay included
+    Corpus.writeAll(work.resolve("warm-in"), seed + 1, 1 to NFiles, Lines, People)
+  }
+
+  def setup(): Unit = {
+    cycle(work.resolve("warm-in"), work.resolve("ckpt-warm").toString, "warm", None)
+    Derby.drop("warm")
+    Workloads.deleteTree(work.resolve("ckpt-warm"))
   }
 
   def op(k: Int, tracer: Option[Tracer]): Long = {
     val db = s"st$k"
-    val (crashed, inserted, identityRows) = tracer match {
-      case None => cycle(k, inputDir, db, None)
-      case Some(t) => t.operation(k, "op")(cycle(k, inputDir, db, tracer))
+    val (crash, beforeCrash, inserted, identityRows) = tracer match {
+      case None => cycle(inputDir, work.resolve(s"ckpt$k").toString, db, None)
+      case Some(t) => t.operation(k, "op")(cycle(inputDir, work.resolve(s"ckpt$k").toString, db, tracer))
     }
-    outcome(k) = (crashed, inserted)
+    outcome(k) = (crash, beforeCrash, inserted)
     val landed = Derby.count(db, """SELECT COUNT(*) FROM "tb_event"""")
     lastFacts = OpFacts(inputBytes = corpus.map(_.bytes).sum,
       edges = corpus.map(_.edges.size.toLong).sum, sinkRows = landed + identityRows,
@@ -328,9 +360,15 @@ final class StreamReplay(spark: SparkSession, work: Path, seed: Long) extends Wo
   def check(k: Int, rows: Long): Option[String] = {
     val db = s"st$k"
     val expected = corpus.map(_.events).sum
-    val (crashed, inserted) = outcome(k)
+    val (crash, beforeCrash, inserted) = outcome(k)
     val distinct = Derby.count(db, """SELECT COUNT(DISTINCT "md5hash") FROM "tb_event"""")
-    if (!crashed) Some(s"cycle $k: the injected crash did not fire")
+    // only the injected crash counts, and only after batches 0-1 landed
+    // part of the corpus, so the restart really replays batch 1
+    val causes = Iterator.iterate(crash.orNull)(_.getCause).takeWhile(_ != null)
+    if (!causes.exists(e => String.valueOf(e.getMessage).contains(StreamReplay.CrashMessage)))
+      Some(s"cycle $k: first attempt did not end in the injected crash: $crash")
+    else if (beforeCrash <= 0 || beforeCrash >= expected)
+      Some(s"cycle $k: $beforeCrash of $expected rows landed before the crash")
     else if (rows != expected || distinct != expected || inserted != expected)
       Some(s"cycle $k: tb_event $rows rows, $distinct distinct, $inserted inserted; expected $expected once each")
     else Workloads.closureMismatch(

@@ -40,10 +40,20 @@ class ForcedFailure(unittest.TestCase):
         self.assertNotEqual(out.returncode, 0)
         res = last_json(out)
         self.assertEqual(res["failed"], 1)
+        self.assertFalse(res["correct"])
         rec = record("etl_backfill", 901)
         # operation 0 threw; the others are samples; plus the end-of-run check
         self.assertEqual(res["attempted"], len(rec["ops"]) + 2)
         self.assertTrue(any("injected operation failure" in e for e in rec["errors"]))
+
+    def test_no_samples_gives_no_value(self):
+        out = run("--workload", "etl_backfill", "--seed", "903", "--seconds", "1",
+                  "--trace", "0", "--inject-failure", "all-ops")
+        self.assertNotEqual(out.returncode, 0)
+        res = last_json(out)
+        self.assertFalse(res["correct"])
+        self.assertEqual(res["failed"], res["attempted"] - 1)
+        self.assertIsNone(res["metrics"]["op_p50_s"]["value"])
 
     def test_check_mismatch_fails_the_run(self):
         out = run("--workload", "etl_backfill", "--seed", "902", "--seconds", "1",

@@ -35,7 +35,7 @@ def java(run_dir: Path, main_class: str) -> list:
     """The JVM command line of a harness main, with its scratch in run_dir."""
     return (["java"]
             + [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
-            + ["-Xmx3g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
+            + ["-Xms3g", "-Xmx3g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
                f"-Djava.io.tmpdir={run_dir / 'tmp'}",
                f"-Dderby.system.home={run_dir / 'derby'}",
                f"-Dderby.stream.error.file={run_dir / 'derby.log'}",
